@@ -1,10 +1,12 @@
 """FIR scatter scale probe (r15): serial vs chunked _fir_averages over
 one giant 1-partition stream (3M ticks, ~10x sf0.1). Measured on the
 round-15 box: serial 10.67 s (1-task stages) vs chunked 2.06 s (5.2x,
-32-task explode stages) -- the at-scale posture bar_aggregate selects
-whenever its two-pass chunk_size is set; the sub-threshold windowed
-path keeps the fused serial scatter, which measures faster at sf0.1
-(1.94 vs 2.29 s bench entry at matched probe_ratio).
+32-task explode stages) -- the scatter bar_aggregate takes whenever its
+ticks are in the two-pass posture (a chunk column stamped by
+globalorder.add_chunk, carried from the source through the chain); the
+sub-threshold windowed posture keeps the fused serial scatter, which
+measures faster at sf0.1 (1.94 vs 2.29 s bench entry at matched
+probe_ratio).
 
 Usage: python scripts_dev/fir_scale_probe.py
 """

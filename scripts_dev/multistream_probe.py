@@ -23,6 +23,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from tickdatapipeline_spark.operators.globalorder import add_chunk
     from tickdatapipeline_spark.operators.hotloop import hot_loop
     from tickdatapipeline_spark.plans.common import SP_DERIV
     from tickdatapipeline_spark.session import get_spark
@@ -36,8 +37,9 @@ def main() -> None:
         (F.lit(41970) + (F.col("id") * 7) % 11).cast("long").alias("raw_price"),
         ((F.col("id") * 3) % 7 - 3).cast("long").alias("price_delta"),
     )
-    for tag, kw in (("windowed", {}), ("chunked", {"chunk_size": chunk})):
-        df = hot_loop(raw, SP_DERIV, stream_id="stream", **kw)
+    for tag, ticks in (("windowed", raw),
+                       ("chunked", add_chunk(raw, "tick_idx - 1", chunk))):
+        df = hot_loop(ticks, SP_DERIV, stream_id="stream")
         t0 = time.time()
         df.write.format("noop").mode("overwrite").save()
         dt = time.time() - t0

@@ -10,6 +10,7 @@ from tests.conftest import make_ticks_raw
 from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
 from tickdatapipeline_spark.operators.bars import bar_aggregate, enrich_ticks_with_bars
 from tickdatapipeline_spark.operators.expansion import expand_volume
+from tickdatapipeline_spark.operators.globalorder import add_chunk
 from tickdatapipeline_spark.operators.hotloop import hot_loop
 
 TS = "20250319 120000 0000000"
@@ -104,8 +105,8 @@ def test_enrichment_nulls_except_completing_tick(spark):
             assert r.bar_idx is None and r.bar_close_raw is None
 
 
-@pytest.mark.parametrize("method,tpb", [("boxcar", 5), ("FIR", 4)])
-@pytest.mark.heavy
+@pytest.mark.parametrize("method,tpb", [
+    ("boxcar", 5), pytest.param("FIR", 4, marks=pytest.mark.heavy)])
 def test_chunked_bars_equal_windowed(spark, method, tpb):
     """Two-pass chunked bar_aggregate must be bit-identical to the
     windowed plan across many chunk boundaries, both averaging methods,
@@ -117,8 +118,8 @@ def test_chunked_bars_equal_windowed(spark, method, tpb):
                              normalization_window_bars=3)
     ticks = processed(spark, prices)
     win = bar_aggregate(ticks, bp).orderBy("bar_idx").toPandas()
-    # chunk_size is in ticks; tpb*2 -> 2-bar chunks, many boundaries
-    chk = bar_aggregate(ticks, bp, chunk_size=tpb * 2).orderBy("bar_idx")
+    # chunk size is in ticks; tpb*2 -> 2-bar chunks, many boundaries
+    chk = bar_aggregate(add_chunk(ticks, "tick_idx - 1", tpb * 2), bp).orderBy("bar_idx")
     chk = chk.select(list(win.columns)).toPandas()
     assert win.equals(chk)
 
@@ -131,7 +132,8 @@ def test_chunked_bars_equal_windowed(spark, method, tpb):
 
     cont = ticks.withColumn("tick_idx", F.col("tick_idx") + 7 * tpb + 2)
     win_s = bar_aggregate(cont, bp, seed=seed).orderBy("bar_idx").toPandas()
-    chk_s = bar_aggregate(cont, bp, seed=seed, chunk_size=tpb * 2).orderBy("bar_idx")
+    chk_s = bar_aggregate(add_chunk(cont, "tick_idx - 1", tpb * 2), bp,
+                          seed=seed).orderBy("bar_idx")
     chk_s = chk_s.select(list(win_s.columns)).toPandas()
     assert win_s.equals(chk_s)
 
@@ -189,9 +191,9 @@ def test_multistream_chunked_bars_equal_windowed(spark, method, tpb):
     ticks_w = hot_loop(expand_volume(raw, stream_id="stream"), cfg,
                        stream_id="stream", stats_ticks_per_bar=8)
     win = bar_aggregate(ticks_w, bp, stream_id="stream")
-    ticks_c = hot_loop(expand_volume(raw, stream_id="stream", chunk_size=9), cfg,
-                       stream_id="stream", stats_ticks_per_bar=8, chunk_size=9)
-    chk = bar_aggregate(ticks_c, bp, stream_id="stream", chunk_size=9)
+    ticks_c = hot_loop(expand_volume(add_chunk(raw, "line_no", 9), stream_id="stream"),
+                       cfg, stream_id="stream", stats_ticks_per_bar=8)
+    chk = bar_aggregate(ticks_c, bp, stream_id="stream")
     a = win.orderBy("stream", "bar_idx").toPandas()
     b = chk.select(*win.columns).orderBy("stream", "bar_idx").toPandas()
     assert len(a) >= 10 and a.equals(b)

@@ -120,8 +120,8 @@ def test_hot_loop_chunked_equality_survives_multi_super(spark):
         cfg = SignalProcessingConfig(encoder_type=enc, cpm_modulation_index=0.2,
                                      tick_derivative_imag_scale=2.0)
         win = hot_loop(expand_volume(raw), cfg, stats_ticks_per_bar=8)
-        chk = hot_loop(expand_volume(raw, chunk_size=7), cfg,
-                       stats_ticks_per_bar=8, chunk_size=7)
+        chk = hot_loop(expand_volume(add_chunk(raw, "line_no", 7)), cfg,
+                       stats_ticks_per_bar=8)
         a = win.orderBy("tick_idx").toPandas()
         b = chk.orderBy("tick_idx").select(list(a.columns)).toPandas()
         assert a.equals(b), enc

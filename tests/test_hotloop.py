@@ -17,6 +17,7 @@ from tests.conftest import make_ticks_raw
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import SignalProcessingConfig
 from tickdatapipeline_spark.operators.expansion import expand_volume
+from tickdatapipeline_spark.operators.globalorder import add_chunk
 from tickdatapipeline_spark.operators.hotloop import HotLoopSeed, hot_loop
 
 TS = "20250319 120000 0000000"
@@ -223,8 +224,10 @@ def test_cpm_phase_half_even_tie(spark):
 # ---- two-pass chunked global order (operators/globalorder.py) ----
 
 
-@pytest.mark.parametrize("enc", ["derivative", "hexad16", "cpm", "amc"])
-@pytest.mark.heavy
+@pytest.mark.parametrize("enc", [
+    pytest.param("derivative", marks=pytest.mark.heavy), "hexad16",
+    pytest.param("cpm", marks=pytest.mark.heavy),
+    pytest.param("amc", marks=pytest.mark.heavy)])
 def test_chunked_equals_windowed(spark, enc):
     """The two-pass chunked formulation must be BIT-identical to the
     single-window plan across chunk boundaries, for every encoder, on a
@@ -237,10 +240,8 @@ def test_chunked_equals_windowed(spark, enc):
     sf = "/root/testdata/sf0.001"
     win = hot_loop(expand_volume(ticks_from_events(spark, sf)), cfg,
                    keep_internals=True)
-    chk = hot_loop(
-        expand_volume(ticks_from_events(spark, sf, chunk_size=7), chunk_size=7),
-        cfg, keep_internals=True, chunk_size=7,
-    )
+    chk = hot_loop(expand_volume(ticks_from_events(spark, sf, chunk_size=7)), cfg,
+                   keep_internals=True)
     a = win.orderBy("tick_idx").toPandas()
     b = chk.orderBy("tick_idx").select(list(a.columns)).toPandas()
     assert a.equals(b)
@@ -262,8 +263,9 @@ def test_chunked_equals_windowed_with_seed(spark):
         win = hot_loop(expand_volume(raw, seed_prev_last=41968, seed_tick0=100),
                        cfg, keep_internals=True, seed=seed)
         chk = hot_loop(
-            expand_volume(raw, seed_prev_last=41968, seed_tick0=100, chunk_size=3),
-            cfg, keep_internals=True, seed=seed, chunk_size=3,
+            expand_volume(add_chunk(raw, "line_no", 3), seed_prev_last=41968,
+                          seed_tick0=100),
+            cfg, keep_internals=True, seed=seed,
         )
         a = win.orderBy("tick_idx").toPandas()
         b = chk.orderBy("tick_idx").select(list(a.columns)).toPandas()
@@ -298,8 +300,8 @@ def test_multistream_chunked_equals_windowed(spark, enc):
     )
     win = hot_loop(expand_volume(raw, stream_id="stream"), cfg,
                    stream_id="stream", stats_ticks_per_bar=8)
-    chk = hot_loop(expand_volume(raw, stream_id="stream", chunk_size=9), cfg,
-                   stream_id="stream", stats_ticks_per_bar=8, chunk_size=9)
+    chk = hot_loop(expand_volume(add_chunk(raw, "line_no", 9), stream_id="stream"),
+                   cfg, stream_id="stream", stats_ticks_per_bar=8)
     a = win.orderBy("stream", "tick_idx").toPandas()
     b = chk.orderBy("stream", "tick_idx").select(list(a.columns)).toPandas()
     assert a.equals(b)

@@ -236,6 +236,76 @@ def test_single_stream_two_pass_has_no_single_partition(spark):
         set_ticks_cache(True)
 
 
+def test_bars_follow_the_chain_posture_on_both_sides_of_the_cutover(spark, monkeypatch):
+    """The two-pass posture travels with the frame: above the cutover
+    every public bars path — the library shape
+    bar_aggregate(processed_ticks(...)) and pipeline_bars with the ticks
+    cache on or off — plans the chunked FIR scatter (an exchange on
+    `_fc`) and no SinglePartition; below it the same expressions keep
+    the windowed plan (no chunk column, no `_fc` exchange). The
+    registry's bars/enrichment queries return the same columns either
+    way.
+
+    pin() truncates lineage to `Scan ExistingRDD` (the chunked FIR
+    scatter sits under bar_aggregate's pin), so every pinned segment's
+    plan is recorded as it is checkpointed and read with the final
+    plan — the whole lineage, at pinned build cost."""
+    from tickdatapipeline_spark.operators.bars import bar_aggregate
+    from tickdatapipeline_spark.plans import common
+    from tickdatapipeline_spark.plans.analytics import queries
+    from tickdatapipeline_spark.plans.common import (
+        BP_FIR,
+        SP_CPM,
+        pipeline_bars,
+        processed_ticks,
+        set_ticks_cache,
+        set_two_pass_threshold,
+    )
+
+    def drop_cached_ticks():
+        for key in [k for k in common._TICKS_CACHE if k[1] == SF]:
+            common._TICKS_CACHE.pop(key).unpersist()
+
+    shapes = {
+        "library": lambda: bar_aggregate(processed_ticks(spark, SF, SP_CPM), BP_FIR),
+        "pipeline_bars cached": lambda: pipeline_bars(spark, SF, BP_FIR),
+        "pipeline_bars uncached": lambda: pipeline_bars(spark, SF, BP_FIR),
+    }
+    registry = {k: queries()[k][0] for k in ("bars_fir", "bars_boxcar", "ticks_enriched")}
+    segments: list[str] = []
+    frame_cls = type(spark.range(1))
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording_checkpoint(df, *args, **kwargs):
+        segments.append(physical(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording_checkpoint)
+    columns = {}
+    try:
+        for threshold in (0, None):
+            set_two_pass_threshold(threshold)
+            for name, build in shapes.items():
+                drop_cached_ticks()
+                set_ticks_cache(name != "pipeline_bars uncached")
+                segments.clear()
+                plan = "\n".join([physical(build()), *segments])
+                if threshold == 0:
+                    assert "hashpartitioning(_fc" in plan, name
+                    assert "SinglePartition" not in plan, name
+                else:
+                    assert "_go_chunk" not in plan, name
+                    assert "hashpartitioning(_fc" not in plan, name
+            set_ticks_cache(True)
+            drop_cached_ticks()
+            columns[threshold] = {k: fn(spark, SF).columns for k, fn in registry.items()}
+    finally:
+        set_two_pass_threshold(None)
+        set_ticks_cache(True)
+        drop_cached_ticks()
+    assert columns[0] == columns[None]
+
+
 def test_runtime_bloom_filter_prunes_fact_scan(spark):
     """The 100 TB lever for selective fact-dim joins that are too big to
     broadcast: Spark's runtime bloom filter builds a filter from the

@@ -6,7 +6,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from tickdatapipeline_spark.functions.scale import salted_join, write_bucketed
+from tickdatapipeline_spark.functions.scale import (
+    salted_join,
+    shuffle_partitions,
+    write_bucketed,
+)
 
 
 def physical(df) -> str:
@@ -35,6 +39,23 @@ def test_salted_join_left_outer(spark):
     out = salted_join(left, right, "k", salt_buckets=4, tiebreaker="payload", how="left")
     got = {(r.k, r.v) for r in out.collect()}
     assert got == {(1, "x"), (2, None)}
+
+
+def test_shuffle_partitions_falls_back_on_non_integer_conf():
+    """A platform may set spark.sql.shuffle.partitions to "auto" (a
+    real local session rejects that value, so a stub stands in): the
+    explicit-repartition sites then use defaultParallelism instead of
+    raising ValueError."""
+    from types import SimpleNamespace
+
+    def stub(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: {"spark.sql.shuffle.partitions": value}[key]),
+            sparkContext=SimpleNamespace(defaultParallelism=7),
+        )
+
+    assert shuffle_partitions(stub("200")) == 200
+    assert shuffle_partitions(stub("auto")) == 7
 
 
 def test_bucketed_join_has_no_exchange(spark):

@@ -62,7 +62,9 @@ def test_read_tick_files_per_stream_numbering(spark, tmp_path):
 def test_read_tick_file_distributed_numbering(spark, tmp_path):
     """Split-chunked line numbering must equal the windowed numbering
     (malformed lines skipped identically) and plan no SinglePartition
-    exchange."""
+    exchange. Its split-keyed chunk column is not the two-pass posture:
+    the chain downstream of it stays windowed."""
+    from tickdatapipeline_spark.operators.globalorder import GO_CHUNK, chunk_size_of
     from tickdatapipeline_spark.sources.tickfile import read_tick_file
 
     p = tmp_path / "ticks.txt"
@@ -79,6 +81,8 @@ def test_read_tick_file_distributed_numbering(spark, tmp_path):
     win = read_tick_file(spark, str(p)).orderBy("line_no").collect()
     dist_df = read_tick_file(spark, str(p), distributed_numbering=True)
     assert "SinglePartition" not in dist_df._jdf.queryExecution().executedPlan().toString()
+    assert chunk_size_of(dist_df) is None
+    assert GO_CHUNK not in expand_volume(dist_df).columns
     dist = dist_df.orderBy("line_no").collect()
     assert len(win) == len(dist) == 200
     for a, b in zip(win, dist):
@@ -127,8 +131,7 @@ def _run_chunked_chain(spark, sf_dir):
     from tickdatapipeline_spark.sources.tickfile import ticks_from_events
 
     raw = ticks_from_events(spark, str(sf_dir), chunk_size=7)
-    expand_volume(raw, chunk_size=7).write.format("noop").mode(
-        "overwrite").save()
+    expand_volume(raw).write.format("noop").mode("overwrite").save()
 
 
 def test_density_guard_raises_on_gapped_or_duplicated_event_ids(
@@ -176,15 +179,18 @@ def test_density_guard_multistream_and_metadata_survival(spark, tmp_path):
     _write_events(spark, tmp_path / "ok", range(40))
     raw = ticks_from_events_streams(spark, str(tmp_path / "ok"), chunk_size=5)
     assert raw.schema[GO_CHUNK].metadata.get("go_dense_order") == "line_no"
-    expand_volume(raw, stream_id="stream", chunk_size=5).write.format(
-        "noop").mode("overwrite").save()
+    expanded = expand_volume(raw, stream_id="stream")
+    # the claim is consumed by the expansion's offsets aggregate; only
+    # the posture (chunk size) survives onto the expanded frame
+    assert expanded.schema[GO_CHUNK].metadata == {"go_chunk_size": 5}
+    expanded.write.format("noop").mode("overwrite").save()
 
     _write_events(spark, tmp_path / "gap2",
                   [e for e in range(40) if e != 9])
     raw = ticks_from_events_streams(spark, str(tmp_path / "gap2"),
                                     chunk_size=5)
     with pytest.raises(Exception, match="dense-order contract"):
-        expand_volume(raw, stream_id="stream", chunk_size=5).write.format(
+        expand_volume(raw, stream_id="stream").write.format(
             "noop").mode("overwrite").save()
 
 

@@ -65,6 +65,17 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as a partition
+    count for an explicit ``repartition(n, keys)``. Some platforms set
+    it to a non-integer such as ``"auto"``; then the cluster's
+    ``defaultParallelism`` stands in."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def cap_group_sizes(df: DataFrame, keys: list[str], cap: int,
                     label: str, cap_name: str, logger) -> DataFrame:
     """Quadratic-blowup skew guard shared by the LSH dedup/ANN paths:

@@ -34,6 +34,14 @@ from pyspark.sql import functions as F
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import BarProcessingConfig
 from tickdatapipeline_spark.functions.fir import design_decimation_filter
+from tickdatapipeline_spark.functions.scale import shuffle_partitions
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    add_chunk,
+    chunk_offsets_plan,
+    chunk_size_of,
+    pin,
+)
 
 
 @dataclass(frozen=True)
@@ -110,9 +118,8 @@ def _fir_averages(
     O(ends) rows before the only full shuffle — identical integer sums
     in any order, bit-identical output.
 
-    ``chunked`` follows the caller's two-pass posture (bar_aggregate
-    passes its own use_chunks), the same size-gated split the tick
-    chain uses: BELOW the two-pass cutover the fused serial scatter
+    ``chunked`` follows the posture of bar_aggregate's ticks — the
+    same size-gated split the tick chain uses: BELOW the two-pass cutover the fused serial scatter
     wins outright (measured r15 at sf0.1, matched probe_ratio: serial
     1.94 s vs chunked 2.29 s bench entry — the extra narrow exchange
     costs more than one core's explode at fixture sizes), ABOVE it the
@@ -143,9 +150,8 @@ def _fir_averages(
             ),
         )
         src = src.withColumn("_fc", F.explode(chunk_seq))
-        n_shuffle = int(
-            src.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        src = src.repartition(n_shuffle, *(part + ["_fc"]))
+        src = src.repartition(
+            shuffle_partitions(src.sparkSession), *(part + ["_fc"]))
         # in-chunk end positions: multiples of `step` within
         # [max(first_end, chunk start), min(last_end, chunk end)]
         lo = F.greatest(
@@ -201,7 +207,6 @@ def bar_aggregate(
     cfg: BarProcessingConfig,
     stream_id: str | None = None,
     seed: "BarSeed | dict | None" = None,
-    chunk_size: int | None = None,
 ) -> DataFrame:
     """Tick stream -> one row per completed bar.
 
@@ -215,11 +220,12 @@ def bar_aggregate(
     the reference's per-stream BarProcessor state
     (/root/reference/src/BarProcessor.jl:41-68). None == start of stream.
 
-    ``chunk_size`` (single-stream batch, measured in TICKS like
-    hot_loop's): two-pass chunked global order over the bar frame — the
-    bar stream is ticks/n rows but still unbounded for a single 100 TB
-    stream, so B4's cumulative H/L sums, the norm carry-forward and
-    B5's prev-average lag each become chunk-local prefixes plus in-plan
+    Ticks in the two-pass posture (chunk column from ``hot_loop``, size
+    in TICKS) take the chunked FIR scatter and two-pass global order
+    over the bar frame — the bar stream is ticks/n rows but still
+    unbounded for a single 100 TB stream, so B4's cumulative H/L sums,
+    the norm carry-forward and B5's prev-average lag each become
+    chunk-local prefixes plus in-plan
     broadcast offsets (operators/globalorder.py), and ``k`` (1-based
     bars-completed) reduces to the row-local ``bar_id + 1 + seed`` —
     bar ids are dense, the trailing-partial filter only ever drops the
@@ -230,6 +236,7 @@ def bar_aggregate(
         raise ValueError("bar processing disabled in config")
     part = [stream_id] if stream_id else []
     n = cfg.ticks_per_bar
+    chunk_size = chunk_size_of(ticks)
     use_chunks = chunk_size is not None and not isinstance(seed, dict)
 
     seeds: dict | None = None
@@ -325,13 +332,6 @@ def bar_aggregate(
         )
 
     if use_chunks:
-        from tickdatapipeline_spark.operators.globalorder import (
-            GO_CHUNK,
-            add_chunk,
-            chunk_offsets_plan,
-            pin,
-        )
-
         bars = add_chunk(bars, "bar_id", max(chunk_size // n, 1))
         # shared by two offsets subplans and the main plan — pin once
         bars = pin(bars)

@@ -21,6 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from tickdatapipeline_spark.functions.scale import shuffle_partitions
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    chunk_offsets_plan,
+    chunk_size_of,
+)
+
 
 def packed_timestamp(ts_col: Column) -> Column:
     """ASCII-pack the first 8 chars into a 64-bit int (VolumeExpansion.jl:46-59).
@@ -95,7 +102,6 @@ def expand_volume(
     seed_prev_last: int | None = None,
     seed_tick0: int = 0,
     seeds: "dict | None" = None,
-    chunk_size: int | None = None,
     valid_price_range: "tuple[int, int] | None" = None,
 ) -> DataFrame:
     """ticks_raw(line_no, ts_str, bid, ask, last, volume) -> expanded ticks.
@@ -111,14 +117,14 @@ def expand_volume(
     stream via a broadcast join of the (tiny) seed table — the shape that
     holds when one micro-batch carries thousands of streams.
 
-    ``chunk_size``: use the two-pass chunked formulation
-    (operators/globalorder.py) — no SinglePartition window; with
-    ``stream_id`` every chunk window and offsets prefix is per-stream.
-    Only per-stream seed dicts stay on the windowed path.
-    The lag's cross-chunk patch is the previous chunk's final price; the
-    tick numbering offset is the running sum of per-chunk expanded-row
-    counts (sum of volumes) — both in-plan broadcast subqueries. Output
-    additionally carries the chunk column for downstream reuse.
+    Input in the two-pass posture (chunk column stamped by
+    ``globalorder.add_chunk``): the chunked formulation — no
+    SinglePartition window; with ``stream_id`` every chunk window and
+    offsets prefix is per-stream. Only per-stream seed dicts stay on the
+    windowed path. The lag's cross-chunk patch is the previous chunk's
+    final price; the tick numbering offset is the running sum of
+    per-chunk expanded-row counts (sum of volumes) — both in-plan
+    broadcast subqueries. Output additionally carries the chunk column.
 
     ``valid_price_range`` (chunked path only): fused-offsets hand-off
     to the hot loop. Validity is a pure function of a line's price and
@@ -132,9 +138,9 @@ def expand_volume(
     offsets subquery + broadcast join. The caller owns the contract
     that the range equals the hot-loop config's (min_price, max_price).
     """
-    if chunk_size is not None and seeds is None:
+    if chunk_size_of(ticks_raw) is not None and seeds is None:
         return _expand_volume_chunked(
-            ticks_raw, chunk_size, stream_id=stream_id,
+            ticks_raw, stream_id=stream_id,
             seed_prev_last=seed_prev_last, seed_tick0=seed_tick0,
             valid_price_range=valid_price_range,
         )
@@ -162,8 +168,7 @@ def expand_volume(
 
 
 def _expand_volume_chunked(
-    ticks_raw: DataFrame,
-    chunk_size: int,
+    lines: DataFrame,
     *,
     stream_id: str | None = None,
     seed_prev_last: int | None,
@@ -173,25 +178,18 @@ def _expand_volume_chunked(
     """Two-pass expand_volume (see expand_volume docstring). With
     ``stream_id`` the chunk order — and every offsets prefix — is local
     to the stream: windows partition by (stream, chunk)."""
-    from tickdatapipeline_spark.operators.globalorder import (
-        GO_CHUNK,
-        add_chunk,
-        chunk_offsets_plan,
-    )
-
     part = [stream_id] if stream_id else []
-    lines = add_chunk(ticks_raw, "line_no", chunk_size)
     # density guard (r15): a source whose line numbering is the closed
     # form over a claimed-dense key (ticks_from_events[_streams] with
     # chunk_size) marks its chunk column with metadata; the offsets
     # aggregate below already touches every line once per chunk, so the
     # contiguity check rides it for free and raises loudly on a gapped/
-    # duplicated events table (see chunk_offsets_plan ``dense``).
-    dn_meta = (ticks_raw.schema[GO_CHUNK].metadata
-               if GO_CHUNK in ticks_raw.columns else {})
+    # duplicated events table (see chunk_offsets_plan ``dense``). The
+    # claim holds for these lines only, so the output drops it.
+    meta = dict(lines.schema[GO_CHUNK].metadata)
     dense = (
-        (dn_meta["go_dense_order"], int(dn_meta["go_chunk_size"]))
-        if "go_dense_order" in dn_meta else None
+        (meta.pop("go_dense_order"), int(meta["go_chunk_size"]))
+        if "go_dense_order" in meta else None
     )
     # in-plan offsets: (final price of preceding chunks, expanded-row
     # count of preceding chunks [, valid expanded-row count — the fused
@@ -201,7 +199,7 @@ def _expand_volume_chunked(
             F.col("volume") >= 1, F.col("volume")
         ).otherwise(F.lit(0))
     }
-    extra_cols: tuple = (GO_CHUNK,)
+    extra_cols: tuple = (F.col(GO_CHUNK).alias(GO_CHUNK, metadata=meta),)
     if valid_price_range is not None:
         lo, hi = valid_price_range
         sums["_go_v0"] = F.when(
@@ -209,7 +207,7 @@ def _expand_volume_chunked(
             & F.col("last").between(F.lit(int(lo)), F.lit(int(hi))),
             F.col("volume"),
         ).otherwise(F.lit(0))
-        extra_cols = (GO_CHUNK, "_go_v0")
+        extra_cols += ("_go_v0",)
     chunk_offsets = chunk_offsets_plan(
         lines,
         sums=sums,
@@ -231,8 +229,7 @@ def _expand_volume_chunked(
     # shuffle parallelism (scale-adaptive: deployments size
     # spark.sql.shuffle.partitions to the cluster), and the exchange
     # still moves LINES, never the exploded replicas.
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    df = df.repartition(n_shuffle, *(part + [GO_CHUNK]))
+    df = df.repartition(shuffle_partitions(df.sparkSession), *(part + [GO_CHUNK]))
 
     w_lines = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no")
     w_ticks = Window.partitionBy(*part, GO_CHUNK).orderBy("line_no", "replica_idx")

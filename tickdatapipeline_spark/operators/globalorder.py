@@ -3,8 +3,9 @@ chunk offsets, computed entirely IN-PLAN (SURVEY.md §4 item 1).
 
 ``Window.partitionBy()`` with no keys plans a SinglePartition exchange —
 the one plan shape that cannot survive a single 100 TB stream. The
-distributed formulation used by ``ticks_from_events`` / ``expand_volume``
-/ ``hot_loop`` when a ``chunk_size`` is supplied:
+distributed formulation used by ``expand_volume`` / ``hot_loop`` /
+``bar_aggregate`` when their input is in the two-pass posture (a chunk
+column stamped by ``add_chunk``, carried from the source down the chain):
 
 1. derive a **monotone chunk id** from the stream's natural ordering key
    (``key DIV chunk_size``) — a pure deterministic column (stable under
@@ -112,21 +113,30 @@ def pin(df: DataFrame) -> DataFrame:
 
 
 def add_chunk(df: DataFrame, key_expr: str, chunk_size: int) -> DataFrame:
-    """Attach the monotone chunk id ``(key_expr) DIV chunk_size``.
+    """Attach the monotone chunk id ``(key_expr) DIV chunk_size``; its
+    ``go_chunk_size`` metadata puts the frame in the two-pass posture.
 
     ``key_expr`` must be non-decreasing in the stream's global order so
-    chunk ids are contiguous, ordered spans of the stream. Reused if
-    already present (one chunk column serves the whole source->expand->
-    hot-loop chain: downstream windows keyed on it satisfy the same
-    hashpartitioning, so each pinned segment of the chain pays exactly
-    ONE exchange over full-data rows — every other hashpartitioning
-    exchange carries per-chunk/per-super aggregates; pinned by
-    tests/test_plan_shape.py::
+    chunk ids are contiguous, ordered spans of the stream. The operators
+    pass the column through (one chunk column serves the whole source->
+    expand->hot-loop chain: downstream windows keyed on it satisfy the
+    same hashpartitioning, so each pinned segment of the chain pays
+    exactly ONE exchange over full-data rows — every other
+    hashpartitioning exchange carries per-chunk/per-super aggregates;
+    pinned by tests/test_plan_shape.py::
     test_two_pass_flagship_full_data_exchange_count).
     """
-    if GO_CHUNK in df.columns:
-        return df
-    return df.withColumn(GO_CHUNK, F.expr(f"({key_expr}) DIV {int(chunk_size)}"))
+    return df.withColumn(
+        GO_CHUNK,
+        F.expr(f"({key_expr}) DIV {int(chunk_size)}").alias(
+            GO_CHUNK, metadata={"go_chunk_size": int(chunk_size)}),
+    )
+
+
+def chunk_size_of(df: DataFrame) -> "int | None":
+    """The chunk size ``add_chunk`` stamped, or None (windowed posture)."""
+    meta = df.schema[GO_CHUNK].metadata if GO_CHUNK in df.columns else {}
+    return int(meta["go_chunk_size"]) if "go_chunk_size" in meta else None
 
 
 def chunk_offsets_plan(

@@ -39,6 +39,13 @@ from pyspark.sql import functions as F
 
 from tickdatapipeline_spark import constants as C
 from tickdatapipeline_spark.config import SignalProcessingConfig
+from tickdatapipeline_spark.operators.globalorder import (
+    GO_CHUNK,
+    add_chunk,
+    chunk_offsets_plan,
+    chunk_size_of,
+    pin,
+)
 
 
 @dataclass(frozen=True)
@@ -86,7 +93,6 @@ def hot_loop(
     stats_ticks_per_bar: int = C.STATS_TICKS_PER_BAR,
     keep_internals: bool = False,
     seed: "HotLoopSeed | dict | None" = None,
-    chunk_size: int | None = None,
 ) -> DataFrame:
     """expanded ticks -> processed ticks.
 
@@ -99,34 +105,23 @@ def hot_loop(
     mirroring the reference's one-TickHotLoopState-per-stream model.
     None == start of stream.
 
-    ``chunk_size``: two-pass chunked global order — every running
-    quantity becomes a chunk-local window prefix plus a broadcast
-    per-chunk offset (operators/globalorder.py), removing the
-    SinglePartition exchange. Applies to the single-stream batch plan
-    AND, with ``stream_id``, to multistream batches whose individual
-    streams are long (windows then partition by (stream, chunk));
-    only per-stream seed DICTS disable it (they stay on the windowed
-    path). The cumulative-valid offsets are an in-plan broadcast
-    subquery; core_seq then needs NO second pass — it is the row-local
-    function valid_cum - 1[seed==0 and a first-valid row seen],
-    because exactly one valid row per cold stream is non-core. Bit-
-    identical to the windowed plan (pinned by tests).
+    Two-pass posture (input chunk column stamped by ``add_chunk``, kept
+    on the output): every running quantity becomes a chunk-local window
+    prefix plus a broadcast per-chunk offset (operators/globalorder.py),
+    removing the SinglePartition exchange. Applies to the single-stream
+    batch plan AND, with ``stream_id``, to multistream batches whose
+    individual streams are long (windows then partition by (stream,
+    chunk)); only per-stream seed DICTS disable it (they stay on the
+    windowed path). The cumulative-valid offsets are an in-plan
+    broadcast subquery; core_seq then needs NO second pass — it is the
+    row-local function valid_cum - 1[seed==0 and a first-valid row
+    seen], because exactly one valid row per cold stream is non-core.
+    Bit-identical to the windowed plan (pinned by tests).
     """
-    # chunked two-pass applies to the single-stream batch plan AND, with
-    # stream_id, to multistream batches whose INDIVIDUAL streams are long
-    # (windows partition by (stream, chunk); every offsets subquery is
-    # per-stream). Per-stream seed dicts stay on the windowed path.
+    chunk_size = chunk_size_of(expanded)
     use_chunks = chunk_size is not None and not isinstance(seed, dict)
     part = [stream_id] if stream_id else []
     if use_chunks:
-        from tickdatapipeline_spark.operators.globalorder import (
-            GO_CHUNK,
-            add_chunk,
-            chunk_offsets_plan,
-            pin,
-        )
-
-        expanded = add_chunk(expanded, "tick_idx - 1", chunk_size)
         w = Window.partitionBy(*part, GO_CHUNK).orderBy("tick_idx")
     else:
         w = Window.partitionBy(*part).orderBy("tick_idx")
@@ -498,4 +493,6 @@ def hot_loop(
         out_cols += ["is_valid", "is_core", "core_seq", "delta_w", "bar_ord", "bars_done", "inv_q16", "nq16", "ratio"]
         if enc == "cpm":
             out_cols += ["cpm_theta"]
+    if use_chunks:
+        out_cols += [GO_CHUNK]
     return df.select(*out_cols)

@@ -62,9 +62,8 @@ def twopass_derivative_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = ticks_from_events(spark, sf_dir, chunk_size=997)
     df = hot_loop(
-        expand_volume(raw, chunk_size=997,
-                      valid_price_range=(SP_DERIV.min_price, SP_DERIV.max_price)),
-        SP_DERIV, chunk_size=997,
+        expand_volume(raw, valid_price_range=(SP_DERIV.min_price, SP_DERIV.max_price)),
+        SP_DERIV,
     )
     return df.select(*TICK_COLS)
 
@@ -125,9 +124,9 @@ def multistream_twopass_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = ticks_from_events_streams(spark, sf_dir, chunk_size=997)
     df = hot_loop(
-        expand_volume(raw, stream_id="stream", chunk_size=997,
+        expand_volume(raw, stream_id="stream",
                       valid_price_range=(SP_DERIV.min_price, SP_DERIV.max_price)),
-        SP_DERIV, stream_id="stream", chunk_size=997,
+        SP_DERIV, stream_id="stream",
     )
     return df.select("stream", *TICK_COLS)
 

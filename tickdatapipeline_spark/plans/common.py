@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from tickdatapipeline_spark.config import BarProcessingConfig, SignalProcessingConfig
 from tickdatapipeline_spark.operators.bars import bar_aggregate
 from tickdatapipeline_spark.operators.expansion import expand_volume
+from tickdatapipeline_spark.operators.globalorder import GO_CHUNK
 from tickdatapipeline_spark.operators.hotloop import hot_loop
-from tickdatapipeline_spark.sources.io import read_parquet
 from tickdatapipeline_spark.sources.tickfile import ticks_from_events
 
 # configs mirroring the shipped default TOML
@@ -150,16 +150,17 @@ def _events_rows(sf_dir: str) -> int:
 
 def _chain(spark: SparkSession, sf_dir: str, sp: SignalProcessingConfig,
            keep_internals: bool) -> DataFrame:
-    """Flagship chain with the size-adaptive global-order strategy.
+    """Flagship chain; the one place the global-order posture is decided.
 
-    Two-pass mode: each operator builds its own in-plan chunk-offset
-    subquery, all keyed on the ONE chunk column the source assigns, so
-    the chain pays a single full-data exchange and zero SinglePartition
-    windows; chunk_size scales with the stream so #chunks stays O(10^4)
-    — capped at 2^27 rows/chunk so the largest un-modded in-chunk
-    accumulation (CPM phase deltas, |dp| < 2^35) stays below 2^62; past
-    the cap #chunks grows instead, which the two-level offsets
-    hierarchy absorbs to ~2^31 chunks (globalorder.MAX_SUPERS)."""
+    Two-pass mode: the source stamps the ONE chunk column every operator
+    downstream (bar_aggregate included) reads and keys its in-plan
+    chunk-offset subquery on, so the chain pays a single full-data
+    exchange and zero SinglePartition windows; chunk_size scales with
+    the stream so #chunks stays O(10^4) — capped at 2^27 rows/chunk so
+    the largest un-modded in-chunk accumulation (CPM phase deltas,
+    |dp| < 2^35) stays below 2^62; past the cap #chunks grows instead,
+    which the two-level offsets hierarchy absorbs to ~2^31 chunks
+    (globalorder.MAX_SUPERS)."""
     n = _events_rows(sf_dir)
     if n < _TWO_PASS_THRESHOLD:
         return hot_loop(expand_volume(ticks_from_events(spark, sf_dir)), sp,
@@ -167,15 +168,15 @@ def _chain(spark: SparkSession, sf_dir: str, sp: SignalProcessingConfig,
     chunk = min(max(TWO_PASS_CHUNK, n // 10_000), 1 << 27)
     raw = ticks_from_events(spark, sf_dir, chunk_size=chunk)
     return hot_loop(
-        expand_volume(raw, chunk_size=chunk,
-                      valid_price_range=(sp.min_price, sp.max_price)), sp,
-        keep_internals=keep_internals, chunk_size=chunk,
+        expand_volume(raw, valid_price_range=(sp.min_price, sp.max_price)), sp,
+        keep_internals=keep_internals,
     )
 
 
 def processed_ticks(spark: SparkSession, sf_dir: str, sp: SignalProcessingConfig = SP_DERIV,
                     keep_internals: bool = False) -> DataFrame:
-    """events -> ticks_raw -> expanded -> hot loop (the flagship chain)."""
+    """events -> ticks_raw -> expanded -> hot loop (the flagship chain);
+    keeps the chain's chunk column (posture) when it has one."""
     if sp is not SP_DERIV or not _CACHE_ENABLED:
         # only the default config's lineage is shared across queries
         # (bars, enrichment, q1-q10); the other encoders are one-shot —
@@ -188,14 +189,13 @@ def processed_ticks(spark: SparkSession, sf_dir: str, sp: SignalProcessingConfig
         # subset, so one cached frame serves both callers
         df = _chain(spark, sf_dir, sp, keep_internals=True).persist()
         _cache_insert(key, df)
-    return df if keep_internals else df.select(*_PLAIN_COLS)
+    plain = _PLAIN_COLS + ([GO_CHUNK] if GO_CHUNK in df.columns else [])
+    return df if keep_internals else df.select(*plain)
 
 
 def pipeline_bars(spark: SparkSession, sf_dir: str, bp: BarProcessingConfig,
                   sp: SignalProcessingConfig = SP_DERIV) -> DataFrame:
-    n = _events_rows(sf_dir)
-    chunk = min(max(TWO_PASS_CHUNK, n // 10_000), 1 << 27) if n >= _TWO_PASS_THRESHOLD else None
-    return bar_aggregate(processed_ticks(spark, sf_dir, sp), bp, chunk_size=chunk)
+    return bar_aggregate(processed_ticks(spark, sf_dir, sp), bp)
 
 
 def exact_percentiles(df: DataFrame, value_col: str, pcts: list[float],
@@ -275,11 +275,6 @@ FROM _pos
 JOIN (SELECT _r AS _lo, _v AS _vlo FROM _ranked) USING (_lo)
 JOIN (SELECT _r AS _hi, _v AS _vhi FROM _ranked) USING (_hi)
 """
-
-
-def register_tables(spark: SparkSession, sf_dir: str, tables: list[str]) -> None:
-    for t in tables:
-        read_parquet(spark, f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
 def grouped_exact_percentiles(df: DataFrame, group_col: str, value_col: str,

@@ -42,7 +42,8 @@ def read_tick_file(
     bits are a monotone chunk id in file-byte order and the low bits
     order lines within the split — line_no = split-local row_number +
     broadcast per-split count offsets (operators/globalorder.py). Same
-    values; the output carries the chunk column for downstream reuse.
+    values. The split-keyed chunk column is not stamped by ``add_chunk``,
+    so the frame stays in the windowed posture downstream.
     """
     lines = spark.read.text(path)
     parts = F.split(F.col("value"), ";")
@@ -139,52 +140,33 @@ def _spark_dialect(sql: str) -> str:
         "printf(", "format_string(")
 
 
-def ticks_base_from_events(
-    spark: SparkSession, sf_dir: str, chunk_size: int
-) -> DataFrame:
-    """Chunked pre-numbering fixture frame: fields + the shared chunk id
-    (event_id DIV chunk_size), pinned once so the chain's offsets
-    subqueries and the main plan all read one materialization (each
-    operator builds its own in-plan offsets over it — see
-    plans/common._chain)."""
+def _dense_chunked(df: DataFrame, key_expr: str, chunk_size: int) -> DataFrame:
+    """Two-pass posture for a closed-form-numbered fixture source.
+
+    ``add_chunk`` stamps the chunk column; the density claim (r15) joins
+    it: downstream, expand_volume's existing per-chunk offsets aggregate
+    verifies that ``line_no`` really is the dense 1-based row number
+    (``GO_CHUNK == (line_no-1) DIV chunk_size``) and RAISES loudly on a
+    gapped/duplicated/re-keyed events table instead of silently
+    misnumbering every line — the closed forms are exact ONLY for
+    contiguous 0-based event_ids (the fixture generator's invariant).
+    Schema metadata survives select/repartition/localCheckpoint, so the
+    check rides an aggregate that already exists (no extra pass).
+
+    A small events file arrives as ONE scan partition, which would
+    serialize the pin's materialization AND every downstream consumer
+    of the checkpoint (offsets groupBys, the expansion's explode all
+    read the pin's partitioning); fan_out is a no-op at scale, where
+    the scan already has many splits (guide: repartition right after a
+    narrow read, before the row-multiplying stages). The pin lets the
+    chain's offsets subqueries and main plan read one materialization.
+    """
     from tickdatapipeline_spark.functions.scale import fan_out
-    from tickdatapipeline_spark.operators.globalorder import add_chunk, pin
+    from tickdatapipeline_spark.operators.globalorder import GO_CHUNK, add_chunk, pin
 
-    read_parquet(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView("__events_src")
-    base = spark.sql(_spark_dialect(_TICKS_FIELDS_CORE).format(events="__events_src"))
-    # a small events file arrives as ONE scan partition, which would
-    # serialize the pin's materialization AND every downstream consumer
-    # of the checkpoint (offsets groupBys, the expansion's explode all
-    # read the pin's partitioning); fan_out is a no-op at scale, where
-    # the scan already has many splits (guide: repartition right after a
-    # narrow read, before the row-multiplying stages)
-    return pin(fan_out(_mark_dense(add_chunk(base, "event_id", chunk_size),
-                                   chunk_size)))
-
-
-def _mark_dense(df: DataFrame, chunk_size: int) -> DataFrame:
-    """Declare the closed-form line-numbering contract on the chunk
-    column (r15, density guard): downstream, expand_volume's existing
-    per-chunk offsets aggregate verifies that ``line_no`` really is the
-    dense 1-based row number (``GO_CHUNK == (line_no-1) DIV
-    chunk_size``) and RAISES loudly on a gapped/duplicated/re-keyed
-    events table instead of silently misnumbering every line — the
-    closed form ``line_no = event_id + 1`` is exact ONLY for contiguous
-    0-based event_ids (the fixture generator's invariant). Schema
-    metadata survives select/repartition/localCheckpoint, so the claim
-    rides the frame to the first consumer that already aggregates per
-    chunk; the check itself is therefore free (no extra pass)."""
-    from tickdatapipeline_spark.operators.globalorder import GO_CHUNK
-
-    cols = [
-        F.col(c) if c != GO_CHUNK else F.col(GO_CHUNK).alias(
-            GO_CHUNK,
-            metadata={"go_dense_order": "line_no",
-                      "go_chunk_size": int(chunk_size)},
-        )
-        for c in df.columns
-    ]
-    return df.select(*cols)
+    df = add_chunk(df, key_expr, chunk_size)
+    meta = {**df.schema[GO_CHUNK].metadata, "go_dense_order": "line_no"}
+    return pin(fan_out(df.withMetadata(GO_CHUNK, meta)))
 
 
 def ticks_from_events(
@@ -192,14 +174,14 @@ def ticks_from_events(
 ) -> DataFrame:
     """ticks_raw fixture derived from {sf_dir}/events.parquet (FIXTURES.md F1).
 
-    With ``chunk_size``, line numbering uses the two-pass chunked
-    formulation (operators/globalorder.py) instead of a SinglePartition
-    row_number window: local row_number per event_id-chunk + broadcast
-    in-plan count offsets. Values are identical; the output carries the
-    chunk column so downstream operators reuse its partitioning.
+    With ``chunk_size``, the frame is in the two-pass posture
+    (operators/globalorder.py): it carries the chunk column
+    (event_id DIV chunk_size) that every downstream tick operator
+    reads, and line numbering needs no SinglePartition row_number
+    window. Values are identical to the windowed form.
     """
+    read_parquet(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView("__events_src")
     if chunk_size is None:
-        read_parquet(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView("__events_src")
         return spark.sql(_spark_dialect(_TICKS_FROM_EVENTS_CORE).format(events="__events_src"))
 
     from tickdatapipeline_spark.operators.globalorder import GO_CHUNK
@@ -211,8 +193,8 @@ def ticks_from_events(
     # source needs neither a per-chunk row_number window nor a
     # chunk-offsets subquery (one full-data window pass and one offsets
     # job fewer per query; values identical, oracle-hash-verified).
-    base = ticks_base_from_events(spark, sf_dir, chunk_size)
-    return base.select(
+    base = spark.sql(_spark_dialect(_TICKS_FIELDS_CORE).format(events="__events_src"))
+    return _dense_chunked(base, "event_id", chunk_size).select(
         (F.col("event_id") + 1).cast("long").alias("line_no"),
         "ts_str", "bid", "ask", "last", "volume", GO_CHUNK,
     )
@@ -296,28 +278,19 @@ def ticks_from_events_streams(
     """With ``chunk_size``: the at-scale variant — per-stream line_no
     comes from the closed form ``event_id DIV n_streams + 1`` (exact for
     the driver generator's contiguous 0-based event_ids, identical to
-    the row_number the windowed form computes) and the frame carries the
-    per-stream chunk column, so not even the SOURCE plans a per-stream
-    serial window."""
+    the row_number the windowed form computes) and the frame is in the
+    two-pass posture (per-stream chunk column stamped by ``add_chunk``),
+    so not even the SOURCE plans a per-stream serial window."""
     read_parquet(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView("__events_src")
     sql = _TICKS_STREAMS_CORE.format(
         n_streams=n_streams, intdiv="DIV", events="__events_src"
     ).replace("printf(", "format_string(")
     if chunk_size is None:
         return spark.sql(sql)
-    from tickdatapipeline_spark.functions.scale import fan_out
-    from tickdatapipeline_spark.operators.globalorder import add_chunk, pin
-
     closed = sql.replace(
         f"row_number() OVER (PARTITION BY event_id % {n_streams}\n"
         f"                       ORDER BY event_id)",
         f"CAST(event_id DIV {n_streams} + 1 AS BIGINT)",
     )
     assert closed != sql, "line_no window not found for closed-form rewrite"
-    # same single-scan-partition hazard as ticks_base_from_events: fan
-    # out before the pin so the checkpoint and its consumers parallelize.
-    # _mark_dense: the per-stream closed form line_no = event_id DIV
-    # n_streams + 1 is exact only for contiguous event_ids — declare the
-    # contract so the expansion's offsets pass verifies it per stream.
-    return pin(fan_out(_mark_dense(
-        add_chunk(spark.sql(closed), "line_no - 1", chunk_size), chunk_size)))
+    return _dense_chunked(spark.sql(closed), "line_no - 1", chunk_size)

@@ -16,7 +16,7 @@ history.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -145,11 +145,6 @@ def advance(
     # caller's sink writes don't recompute the plan. Select OUT_COLS for
     # the reference-parity output schema, and unpersist() after writing.
     return processed, next_state
-
-
-def carry_forward(state: StreamState) -> StreamState:
-    """State after an empty batch (no ticks): unchanged."""
-    return replace(state)
 
 
 def advance_bars(
